@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .plan_utils import let
+
 
 # ------------------------------------------------------------------ exact
 
@@ -39,17 +41,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") 
 
 # ------------------------------------------------------------------ shingles / minhash
 
-def _let(value: Column, body) -> Column:
-    """Bind ``value`` as a lambda variable so ``body`` may reference it many
-    times while it evaluates ONCE per row: Catalyst never CSEs repeated
-    subexpressions inside HOF lambdas (CLAUDE.md), so an unbound
-    ``split(text)`` referenced l times per position re-splits the text l
-    times per position. ``transform`` over a one-element array is the
-    cheapest expression-level let-binding Spark offers (round-9; measured
-    2.5x on the shingle builders at sf1.0)."""
-    return F.element_at(F.transform(F.array(value), body), 1)
-
-
 def word_shingles(text_col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (HOF, no UDF).
 
@@ -63,7 +54,7 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     old single-NULL-gram array). Measured 1.6 -> 0.7 s for the n=8 gram
     build over 50k docs."""
     w = F.split(F.col(text_col), r"\s+")
-    return _let(
+    return let(
         w,
         lambda wa: F.when(
             wa.isNull(), F.expr("array(cast(null as string))")
@@ -110,7 +101,7 @@ def shingle_hashes(text_col: str, n: int = 3) -> Column:
     argument, and NULL args leave the accumulator untouched exactly like
     a truncated slice (verified 0 mismatches incl. short/NULL docs)."""
     w = F.split(F.col(text_col), r"\s+")
-    return _let(
+    return let(
         w,
         lambda wa: F.array_distinct(
             F.transform(

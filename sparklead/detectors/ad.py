@@ -21,10 +21,34 @@ model fitting is never the scale bottleneck; featurization is.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def _call_scoped_persist(*dfs: DataFrame) -> Iterator[None]:
+    """Persist each frame for the span of ONE public call, then unpersist.
+
+    Spark is lazy, so every action of a model fit (vocabulary fit, the
+    estimator's pre-passes, its training summary) would otherwise rerun
+    the frame's whole lineage — for the LogLead path that is the scan, the
+    masking chain, the Drain assignment and the sequence shuffle, once per
+    action. A frame the caller already cached is left alone: its cache is
+    the caller's to keep and to free."""
+    owned = []
+    try:
+        for df in dfs:
+            if df.storageLevel == StorageLevel.NONE:
+                owned.append(df.persist())
+        yield
+    finally:
+        for df in owned:
+            df.unpersist()
 
 
 def hash_bucket(key_col: str, seed: int = 42):
@@ -217,19 +241,20 @@ class AnomalyDetector:
                 f"unknown model {model!r}; choose from {sorted(set(_SPARK_MODELS) | _SKLEARN_MODELS)}"
             )
         self.kind = model
-        feats = self.featurizer.fit(train_df).transform(train_df)
-        if model in _SPARK_MODELS:
-            import importlib
+        # one sequence-level copy feeds the vocabulary fit, the estimator's
+        # pre-passes, its training input and its summary jobs
+        with _call_scoped_persist(train_df):
+            feats = self.featurizer.fit(train_df).transform(train_df)
+            if model in _SPARK_MODELS:
+                import importlib
 
-            mod, cls, supervised = _SPARK_MODELS[model]
-            est = getattr(importlib.import_module(mod), cls)(
-                featuresCol="features", **({"labelCol": "label"} if supervised else {"k": 2, "seed": 42}), **params
-            )
-            self.model = est.fit(feats)
-        elif model in _SKLEARN_MODELS:
-            self.model = self._fit_sklearn(model, feats, **params)
-        else:
-            raise ValueError(f"unknown model {model}")
+                mod, cls, supervised = _SPARK_MODELS[model]
+                est = getattr(importlib.import_module(mod), cls)(
+                    featuresCol="features", **({"labelCol": "label"} if supervised else {"k": 2, "seed": 42}), **params
+                )
+                self.model = est.fit(feats)
+            else:
+                self.model = self._fit_sklearn(model, feats, **params)
         return self
 
     def _fit_sklearn(self, model: str, feats: DataFrame, **params):
@@ -442,14 +467,16 @@ def evaluate_all(
     """Reference evaluate_all_ads (:399-412): every model over the same split.
     One SHARED featurizer: the vocabulary fit (the expensive part) runs once
     and every model reuses it — the reference likewise featurizes once per
-    input-column combination."""
+    input-column combination. Both frames are persisted once around the
+    model loop, so the N models do not each rerun their lineage."""
     out = {}
     feat = SeqFeaturizer(**(featurizer_kw or {}))
-    for m in models:
-        det = AnomalyDetector(feat)
-        try:
-            det.train(train_df, m)
-            out[m] = evaluate(det.predict(test_df))
-        except NotImplementedError as e:
-            out[m] = {"skipped": str(e)}
+    with _call_scoped_persist(train_df, test_df):
+        for m in models:
+            det = AnomalyDetector(feat)
+            try:
+                det.train(train_df, m)
+                out[m] = evaluate(det.predict(test_df))
+            except NotImplementedError as e:
+                out[m] = {"skipped": str(e)}
     return out

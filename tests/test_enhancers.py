@@ -5,6 +5,7 @@ implementation of the reference semantics (BASELINE.json input_hint:
 import re
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from sparklead import synth
@@ -26,11 +27,11 @@ _PY_PATTERNS = [
 ]
 
 
-def py_normalize(message: str) -> str:
+def py_normalize(message: str, passes: int = 2) -> str:
     line = message.split("\n")[0]
     for repl, pat in _PY_PATTERNS:
-        line = re.sub(pat, repl, line)
-        line = re.sub(pat, repl, line)
+        for _ in range(passes):
+            line = re.sub(pat, repl, line)
     return line
 
 
@@ -51,6 +52,61 @@ def test_normalize_token_equality(events):
         expected = py_normalize(r["m_message"])
         assert r["e_message_normalized"] == expected, r["m_message"]
         assert list(r["e_words"]) == expected.split(" ")  # per-row token-array equality
+
+
+# Lines where a match consumes the delimiter the next match needs, so the
+# second pass of a pattern changes the output: the cases the guarded second
+# pass must not skip.
+_SECOND_PASS_CASES = [
+    "1 2 3",
+    "1.2.3.4.5.6.7.8",
+    "10.0.0.1 10.0.0.2 10.0.0.3",
+    "0x1f 0x2e 0x3d",
+    "AB12 CD34 EF56 AB12-AB12 CD34 EF56 AB12",
+    "abcdef1 abcdef2 abcdef3:abcdef4 abcdef5 abcdef6",
+    "a:-1:+2:3",
+    "x 0xa 0xb y",
+    "aa:bb:cc:dd ee:ff:00:11 22:33:44:55",
+]
+
+# Fragments that build adjacent and overlapping matches for every pattern.
+# The alphabet stays inside ASCII without carriage returns: Java's `.` and
+# `$` treat \r, \u0085, \u2028 and \u2029 as line terminators and `\d` is
+# ASCII-only, where Python's re (the oracle) differs — an engine difference
+# this test does not probe.
+_FRAGMENTS = [
+    "1", "23", "456", "-7", "+8", " ", "  ", ".", ":", ",", "=", "/", "_",
+    "0x", "0x1F", "ff", "abcdef", "a1b2c3", "AB12", "CD34 ", "blk_", "x",
+    "Z", "executed cmd ", '"', '"ls -l"', "\n", "\x00", "\t",
+]
+
+
+def _spark_normalize(spark, lines):
+    df = spark.createDataFrame([(i, m) for i, m in enumerate(lines)], "i int, m_message string")
+    return [r["e_message_normalized"] for r in E.normalize(df).orderBy("i").collect()]
+
+
+def test_normalize_second_pass_cases(spark):
+    for line in _SECOND_PASS_CASES:
+        assert py_normalize(line, passes=1) != py_normalize(line), line  # the case needs pass two
+    assert _spark_normalize(spark, _SECOND_PASS_CASES) == [py_normalize(m) for m in _SECOND_PASS_CASES]
+    assert _spark_normalize(spark, [None, "", "\n", "7\n8"]) == [None, "", "", "<NUM>"]
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.lists(st.sampled_from(_FRAGMENTS), max_size=24).map("".join), min_size=1, max_size=40))
+def test_normalize_matches_reference_property(spark, lines):
+    assert _spark_normalize(spark, lines) == [py_normalize(m) for m in lines]
+
+
+def test_normalize_output_feeds_a_pandas_udf(spark):
+    # Drain's assignment is a pandas UDF over the normalized tokens: Spark
+    # must still extract it from an uncached normalize lineage
+    from sparklead.mining.drain import parse_drain
+
+    tokens = E.words(E.normalize(load_hdfs_events(synth.raw_log_corpus(spark, 200))), "e_message_normalized")
+    parsed, _ = parse_drain(tokens, "e_words", "e_event_drain_id")
+    assert parsed.filter(F.col("e_event_drain_id").isNull()).count() == 0
 
 
 def test_trigrams_set_equality(events):

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparklead import synth
-from sparklead.detectors.ad import AnomalyDetector, SeqFeaturizer, evaluate, train_test_split
+from sparklead.detectors.ad import AnomalyDetector, SeqFeaturizer, evaluate, evaluate_all, train_test_split
 from sparklead.enhancers import eventlog as E
 from sparklead.enhancers.sequence import aggregate_sequences
 from sparklead.mining.drain import parse_drain
@@ -106,6 +106,44 @@ def test_kmeans_unsupervised_runs(labeled_seq):
     det.train(tr, "KMEANS")
     out = det.predict(te)
     assert set(r["pred_ano"] for r in out.select("pred_ano").distinct().collect()) <= {0, 1}
+
+
+def test_lr_metrics_unchanged_by_call_scoped_persist(labeled_seq):
+    # the confusion counts LR reached on this fixture before train()
+    # persisted its input: the cached copy must train the same model
+    tr, te = train_test_split(labeled_seq, 0.5)
+    det = AnomalyDetector(SeqFeaturizer(item_col="events", numeric_cols=("seq_len",))).train(tr, "LR")
+    m = evaluate(det.predict(te))
+    assert (m["tp"], m["fp"], m["fn"], m["tn"]) == (32, 1, 4, 0), m
+    assert m["f1"] == pytest.approx(0.927536231884058)
+
+
+def test_train_and_evaluate_all_leave_no_cache(spark, labeled_seq):
+    # clear first: module fixtures (labeled_seq itself) hold caches of their own
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    tr, te = train_test_split(labeled_seq, 0.5)
+    AnomalyDetector(SeqFeaturizer(item_col="events")).train(tr, "LR")
+    assert jsc.getPersistentRDDs().size() == 0
+    out = evaluate_all(tr, te, {"item_col": "events"}, models=("LR", "DT"))
+    assert out["LR"]["f1"] > 0.9 and out["DT"]["f1"] > 0.9, out
+    assert jsc.getPersistentRDDs().size() == 0
+
+
+def test_train_keeps_caller_cache(spark, labeled_seq):
+    spark.catalog.clearCache()
+    tr, te = train_test_split(labeled_seq, 0.5)
+    tr.cache().count()
+    te.cache()  # declared but not yet materialized
+    try:
+        AnomalyDetector(SeqFeaturizer(item_col="events")).train(tr, "LR")
+        assert tr.is_cached and tr.storageLevel.useMemory
+        evaluate_all(tr, te, {"item_col": "events"}, models=("LR",))
+        assert tr.is_cached and te.is_cached
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == 2
+    finally:
+        tr.unpersist()
+        te.unpersist()
 
 
 # ------------------------------------------------------------------ streaming

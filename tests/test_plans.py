@@ -65,6 +65,26 @@ def test_enhancer_chain_is_narrow(spark):
     assert "Exchange" not in p  # zero shuffles: the whole chain is map-side
 
 
+def test_normalize_chain_evaluates_each_pass_once(spark):
+    """Two regexp_replace calls per masking pattern at most: the first pass
+    and the guarded second one. An inlined first pass referenced twice (or
+    a refactor that re-typed the chain) would double the regex work without
+    changing a single output row, so only the plan shows it. Under a filter
+    the optimizer copies the chain into the pushed-down predicate once — as
+    it did for the unguarded chain — and a step referencing its input more
+    than once would grow that copy exponentially in the pattern count."""
+    raw = synth.raw_log_corpus(spark, 50)
+    bound = 2 * len(E.MASKING_PATTERNS_DRAIN)
+    events = load_hdfs_events(raw)
+    norm = E.normalize(events)
+    tokens = E.length(E.words(norm, "e_message_normalized"))
+    for df, copies in ((norm, 1), (tokens, 1), (tokens.filter(F.size("e_words") > 3), 2)):
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+        assert optimized.count("regexp_replace(") <= copies * bound
+        assert "Exchange" not in _physical(df)
+    assert norm.columns == events.columns + ["e_message_normalized"]  # no helper columns leak
+
+
 def test_sequence_agg_single_shuffle(spark):
     raw = synth.raw_log_corpus(spark, 50)
     enh = E.event_id(E.length(E.words(E.normalize(load_hdfs_events(raw)), "e_message_normalized")))
